@@ -3,8 +3,8 @@
 
 Default mode (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+local[$SPARK_GRAFT_CPUS] (default: every core) and prints ONE JSON line:
+  {"metric": ..., "value": N, "unit": "pairs/s", "queries": {...}, "sf": ...}
 
 --scaling mode (north-rule evidence): runs the identical scoring job at
 local[8] and local[32] on the same input and reports throughput at both plus
@@ -391,7 +391,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     def _parts(default: int) -> int:
@@ -475,7 +475,7 @@ def main() -> None:
     print(json.dumps({
         "metric": "candidate_pairs_scored_per_sec",
         "value": round(r["pairs_scored_per_sec"], 1),
-        "unit": "sec",
+        "unit": "pairs/s",
         "queries": queries,
         "sf": sf,
         "n_rows": r["n_rows"],

@@ -10,7 +10,6 @@ Modes:
   --minhash     minhash_lsh signature vs full pipeline isolation
   --srp         embedding_srp stage isolation
   --ann         ann_topk isolation
-  --plans NAME  print .explain("formatted") for a query path
 """
 
 from __future__ import annotations
@@ -172,7 +171,7 @@ def main() -> None:
     ap.add_argument("--ann", action="store_true")
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = get_spark(app_name="bench-extra", master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus, 16))
     res = {}

@@ -4,7 +4,7 @@ Mirrors the reference's `splink.exploratory.similarity_analysis`
 (/root/reference/splink/internals/similarity_analysis.py:23-331):
 side-by-side comparator scores for candidate string pairs while a user is
 DESIGNING comparisons, before any linkage runs. The reference shells out to
-DuckDB + the `phonetics` package; this engine reuses its own numpy kernels
+DuckDB + the `phonetics` package; this engine reuses its own string kernels
 (functions/similarity.py — pinned to DuckDB semantics and fuzz-tested
 against it) and the Double Metaphone encoder (functions/phonetic.py), so
 the exploratory numbers are EXACTLY what the pipeline will compute at

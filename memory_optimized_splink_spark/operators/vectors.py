@@ -7,8 +7,8 @@ Three-stage staging mirrors the fork's memory-optimized path
      travels, only its sha).
   2. comparison metrics — each expensive similarity computed ONCE per
      (comparison, kind) and aliased (ref: md5-aliased metric columns,
-     comparison_level.py:228-251). This select is where the vectorized
-     pandas-UDF batches run.
+     comparison_level.py:228-251). This select is where the string-metric
+     Arrow UDF batches run (functions.similarity.string_metric).
   3. gamma CASE ladder — null -> -1, graded levels best-first, else -> 0
      (comparison.py:170-175, comparison_level.py:564-576).
 """
@@ -46,8 +46,10 @@ def _metric_expr(kind: str, l: Column, r: Column,
     if kind == "jaro":
         return jaro_udf(l, r)
     if kind == "levenshtein":
-        # value-identical either way (levenshtein_udf is fuzz-pinned to the
-        # builtin, incl. NULL->NULL). When the projection ALREADY carries an
+        # value-identical either way up to 8192 codepoints (levenshtein_udf
+        # is fuzz-pinned to the builtin, incl. NULL->NULL); past that
+        # ceiling the udf raises ValueError and fails the stage, where the
+        # builtin would score. When the projection ALREADY carries an
         # Arrow metric stage, the udf rides it and DuckDB's levenshtein
         # measured ~25-30% off the whole stage vs the JVM expression
         # (noop-forced A/B at 2.6M bench-shaped pairs); when no Python

@@ -38,18 +38,15 @@ class LocalScoringUnsupported(ValueError):
     pass
 
 
-def _pair(fn, l, r):
-    return fn(pd.Series([l]), pd.Series([r]))[0]
+def _string_metric(kind: str, l, r):
+    """One pair through the dispatcher the batch path's UDFs use
+    (functions.similarity.string_metric), so the two cannot drift."""
+    import pyarrow as pa
 
+    from .functions.similarity import string_metric
 
-def _levenshtein(a: str, b: str) -> int:
-    """Codepoint Levenshtein — same kernel the batch path's vectorized UDFs
-    use (functions.similarity.edit_distance_np, damerau=False), so the two
-    implementations cannot drift."""
-    from .functions.similarity import edit_distance_np
-
-    return int(_pair(lambda x, y: edit_distance_np(x, y, damerau=False),
-                     a, b))
+    return string_metric(kind, pa.array([str(l)]), pa.array([str(r)]))[0] \
+        .as_py()
 
 
 def _to_epoch(v) -> float | None:
@@ -134,25 +131,18 @@ class LocalScorer:
             # lat/long) — their own null handling is below
             if k not in ("columns_reversed", "distance_in_km"):
                 return False
-        if k == "levenshtein":
-            return _levenshtein(l, r) <= lv.threshold
-        if k == "damerau_levenshtein":
-            from .functions.similarity import edit_distance_np
-            return _pair(lambda a, b: edit_distance_np(a, b, damerau=True),
-                         l, r) <= lv.threshold
-        if k == "jaro":
-            from .functions.similarity import jaro_np
-            return _pair(jaro_np, l, r) >= lv.threshold
-        if k == "jaro_winkler":
-            from .functions.similarity import jaro_winkler_np
-            return _pair(jaro_winkler_np, l, r) >= lv.threshold
+        if k in ("levenshtein", "damerau_levenshtein"):
+            return _string_metric(k, l, r) <= lv.threshold
+        if k in ("jaro", "jaro_winkler"):
+            return _string_metric(k, l, r) >= lv.threshold
         if k == "jaccard_chars":
             a, b = set(l), set(r)
             union = len(a | b)
             return union > 0 and len(a & b) / union >= lv.threshold
         if k == "cosine":
             from .functions.similarity import cosine_np
-            return _pair(cosine_np, l, r) >= lv.threshold
+            return cosine_np(pd.Series([l]), pd.Series([r]))[0] \
+                >= lv.threshold
         if k == "array_intersect":
             return len(set(l) & set(r)) >= int(lv.threshold)
         if k == "array_subset":
@@ -198,7 +188,7 @@ class LocalScorer:
         if k == "pairwise_levenshtein":
             # batch: array_min over an empty/null-element grid is NULL ->
             # condition false; skip None elements and empty products
-            dists = [_levenshtein(x, y)
+            dists = [_string_metric("levenshtein", x, y)
                      for x in l for y in r
                      if x is not None and y is not None]
             if not dists:

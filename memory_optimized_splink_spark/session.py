@@ -3,8 +3,11 @@
 Design notes (scale-first):
 - AQE on: runtime coalescing + skew-join splitting complements our explicit
   hot-key salting (SURVEY.md §4 "Salting / skew handling").
-- Arrow on: every string-similarity kernel is a vectorized pandas UDF
-  (Arrow batches), never row-at-a-time Python (north rule).
+- Arrow on: every string-similarity kernel runs as a batched Arrow UDF
+  (functions.similarity), never row-at-a-time Python.
+- Driver heap: in local mode the driver JVM hosts every executor, so its
+  default is derived from the machine (40% of physical RAM, capped at
+  16g); SPARK_GRAFT_DRIVER_MEM overrides it.
 - shuffle.partitions defaults to 32 locally; on a real cluster pass
   ~5x total cores (reference guidance:
   /root/reference/docs/topic_guides/performance/optimising_spark.md:17-21).
@@ -15,6 +18,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """min(16g, 40% of physical RAM) in whole GiB, at least 1g. A fixed 16g
+    heap outgrows a 15 GiB machine once the Python workers take their
+    share, and the JVM is then killed rather than made to spill."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(16, int(0.4 * phys / 2**30)))}g"
 
 
 def get_spark(
@@ -45,7 +56,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
         # single-JVM local mode: heartbeats share the driver's RPC loop, so
         # long GC pauses / CPU oversubscription can fake a "dead executor".
         # Raise via env for very large local runs (no remote failure to

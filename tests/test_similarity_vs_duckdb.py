@@ -1,6 +1,8 @@
-"""Kernel parity: numpy similarity kernels must match DuckDB's builtins
+"""Kernel parity: the string-metric dispatcher must match DuckDB's builtins
 cell-for-cell (DuckDB is the reference's default backend, so these ARE the
-reference semantics). Fuzzed, plus literal edge cases."""
+reference semantics) on BOTH backends: the embedded DuckDB and the numpy
+kernels, forced by setting the module global `_duckdb` to None (what an
+environment without duckdb gets). Fuzzed, plus literal edge cases."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from memory_optimized_splink_spark.functions import similarity as S
 from memory_optimized_splink_spark.functions.similarity import (
     edit_distance_np,
     jaro_np,
@@ -24,6 +27,14 @@ EDGE = [
     ("src/core/main0.py", "src/core/mian0.py"), ("x" * 100, "x" * 99 + "y"),
     ("prefixmatch", "prefixmxtch"), ("ünïcode", "unicode"), ("日本語", "日本誤"),
 ]
+
+
+def _backends(monkeypatch):
+    """Yield once on the default backend (embedded DuckDB), then once on
+    the numpy kernels."""
+    yield "duckdb"
+    monkeypatch.setattr(S, "_duckdb", None)
+    yield "numpy"
 
 
 def _fuzz_pairs(n=5000, seed=3):
@@ -52,24 +63,22 @@ def pairs():
     return s1, s2, ref
 
 
-def test_jaro_winkler_matches_duckdb(pairs):
+def test_jaro_winkler_matches_duckdb(pairs, monkeypatch):
     s1, s2, ref = pairs
-    # BOTH backends (auto = embedded duckdb; use_duckdb=False = numpy) must
-    # match the oracle — the numpy fallback stays pinned even though the
-    # default route now calls the oracle function itself
-    assert np.abs(jaro_winkler_np(s1, s2) - ref.jw.to_numpy()).max() < 1e-12
-    assert np.abs(jaro_winkler_np(s1, s2, use_duckdb=False)
-                  - ref.jw.to_numpy()).max() < 1e-12
+    # BOTH backends must match the oracle — the numpy fallback stays pinned
+    # even though the default route calls the oracle function itself
+    for _ in _backends(monkeypatch):
+        assert np.abs(jaro_winkler_np(s1, s2)
+                      - ref.jw.to_numpy()).max() < 1e-12
 
 
-def test_jaro_matches_duckdb(pairs):
+def test_jaro_matches_duckdb(pairs, monkeypatch):
     s1, s2, ref = pairs
-    assert np.abs(jaro_np(s1, s2) - ref.j.to_numpy()).max() < 1e-12
-    assert np.abs(jaro_np(s1, s2, use_duckdb=False)
-                  - ref.j.to_numpy()).max() < 1e-12
+    for _ in _backends(monkeypatch):
+        assert np.abs(jaro_np(s1, s2) - ref.j.to_numpy()).max() < 1e-12
 
 
-def test_levenshtein_matches_duckdb(pairs):
+def test_levenshtein_matches_duckdb(pairs, monkeypatch):
     # DuckDB levenshtein is byte-based; ours matches Spark's builtin
     # (codepoint-based). They agree on ASCII, which is what the engine's
     # oracle-checked columns (repo/path/lang) contain.
@@ -77,10 +86,9 @@ def test_levenshtein_matches_duckdb(pairs):
     ascii_mask = np.array(
         [a.isascii() and b.isascii() for a, b in zip(s1, s2)]
     )
-    got = edit_distance_np(s1, s2, damerau=False)
-    assert (got[ascii_mask] == ref.lev.to_numpy()[ascii_mask]).all()
-    got_np = edit_distance_np(s1, s2, damerau=False, use_duckdb=False)
-    assert (got == got_np).all()
+    for _ in _backends(monkeypatch):
+        got = edit_distance_np(s1, s2, damerau=False)
+        assert (got[ascii_mask] == ref.lev.to_numpy()[ascii_mask]).all()
 
 
 def test_damerau_levenshtein_literals():
@@ -92,72 +100,57 @@ def test_damerau_levenshtein_literals():
     assert got.tolist() == [1, 2, 3, 0, 1, 1]
 
 
-def test_damerau_levenshtein_matches_duckdb(pairs):
+def test_damerau_levenshtein_matches_duckdb(pairs, monkeypatch):
     s1, s2, ref_unused = pairs
     ascii_mask = np.array(
         [a.isascii() and b.isascii() for a, b in zip(s1, s2)]
     )
-    got = edit_distance_np(s1, s2, damerau=True)
     con = duckdb.connect()
     tbl = pd.DataFrame({"a": s1, "b": s2})  # noqa: F841
     exp = con.execute(
         "select damerau_levenshtein(a,b) dl from tbl").fetchdf().dl.to_numpy()
-    assert (got[ascii_mask] == exp[ascii_mask]).all()
-    got_np = edit_distance_np(s1, s2, damerau=True, use_duckdb=False)
-    assert (got == got_np).all()
+    for _ in _backends(monkeypatch):
+        got = edit_distance_np(s1, s2, damerau=True)
+        assert (got[ascii_mask] == exp[ascii_mask]).all()
 
 
-def test_duckdb_backend_routing_and_equality(pairs):
+def test_duckdb_backend_routing_and_equality(pairs, monkeypatch):
     """The embedded-duckdb backend must (a) actually fire where claimed —
     always for jaro/JW, all-ASCII batches only for the edit distances —
     and (b) return exactly the numpy kernels' values elementwise (this
     also pins the order-preservation of the single-threaded duckdb scan
     over a 5k-row batch)."""
-    from memory_optimized_splink_spark.functions import similarity as S
-
     if S._duckdb is None:
         pytest.skip("duckdb not installed: numpy-only environment")
     s1, s2, _ = pairs
+    am = np.array([a.isascii() and b.isascii() for a, b in zip(s1, s2)])
+    a1 = s1[am].reset_index(drop=True)
+    a2 = s2[am].reset_index(drop=True)
     calls: list[str] = []
-    orig = S._duck_pairs
+    orig = S._duck_metric
 
-    def spy(fn, v1, v2, dt):
+    def spy(fn, a, b):
         calls.append(fn)
-        return orig(fn, v1, v2, dt)
+        return orig(fn, a, b)
 
-    S._duck_pairs = spy
-    try:
-        # mixed-ascii corpus: jaro/JW route to duckdb, edit distances
-        # (codepoint-pinned) must fall back to numpy
-        assert np.array_equal(jaro_np(s1, s2),
-                              jaro_np(s1, s2, use_duckdb=False))
-        assert np.array_equal(jaro_winkler_np(s1, s2),
-                              jaro_winkler_np(s1, s2, use_duckdb=False))
-        assert np.array_equal(edit_distance_np(s1, s2, damerau=False),
-                              edit_distance_np(s1, s2, damerau=False,
-                                               use_duckdb=False))
-        assert np.array_equal(edit_distance_np(s1, s2, damerau=True),
-                              edit_distance_np(s1, s2, damerau=True,
-                                               use_duckdb=False))
-        assert calls == ["jaro_similarity", "jaro_winkler_similarity"]
-        # all-ascii batch: every kernel routes to duckdb
-        calls.clear()
-        am = np.array([a.isascii() and b.isascii() for a, b in zip(s1, s2)])
-        a1 = s1[am].reset_index(drop=True)
-        a2 = s2[am].reset_index(drop=True)
-        assert np.array_equal(edit_distance_np(a1, a2, damerau=False),
-                              edit_distance_np(a1, a2, damerau=False,
-                                               use_duckdb=False))
-        assert np.array_equal(edit_distance_np(a1, a2, damerau=True),
-                              edit_distance_np(a1, a2, damerau=True,
-                                               use_duckdb=False))
-        assert calls == ["levenshtein", "damerau_levenshtein"]
-        # non-default JW parameters have no duckdb builtin: numpy only
-        calls.clear()
-        jaro_winkler_np(a1, a2, prefix_weight=0.2)
-        assert calls == []
-    finally:
-        S._duck_pairs = orig
+    def run_all():
+        # mixed-ascii corpus, then its all-ascii subset
+        return [jaro_np(s1, s2), jaro_winkler_np(s1, s2),
+                edit_distance_np(s1, s2, damerau=False),
+                edit_distance_np(s1, s2, damerau=True),
+                edit_distance_np(a1, a2, damerau=False),
+                edit_distance_np(a1, a2, damerau=True)]
+
+    monkeypatch.setattr(S, "_duck_metric", spy)
+    got = run_all()
+    # jaro/JW route to duckdb on the mixed corpus; the edit distances
+    # (codepoint-pinned) fall back to numpy there and route to duckdb only
+    # on the all-ascii batch
+    assert calls == ["jaro_similarity", "jaro_winkler_similarity",
+                     "levenshtein", "damerau_levenshtein"]
+    monkeypatch.setattr(S, "_duckdb", None)
+    for g, want in zip(got, run_all()):
+        assert np.array_equal(g, want)
 
 
 def test_udfs_run_in_spark(spark):
@@ -178,9 +171,9 @@ def test_udfs_run_in_spark(spark):
     assert got[("abc", "abc")] == 1.0
 
 
-def test_jaro_winkler_hypothesis_property():
+def test_jaro_winkler_hypothesis_property(monkeypatch):
     """Property-based fuzz (hypothesis): arbitrary unicode text pairs must
-    match DuckDB bit-for-bit."""
+    match DuckDB bit-for-bit, on both backends."""
     import duckdb
     from hypothesis import given, settings as hsettings, strategies as st
 
@@ -196,7 +189,8 @@ def test_jaro_winkler_hypothesis_property():
             "select jaro_winkler_similarity(?, ?)", [a, b]).fetchone()[0]
         assert abs(got - want) < 1e-12, (a, b, got, want)
 
-    check()
+    for _ in _backends(monkeypatch):
+        check()
 
 
 def _long_pairs(seed=11, n=40):
@@ -233,31 +227,50 @@ def long_pairs():
     return s1, s2, ref
 
 
-def test_long_strings_exact_not_truncated(long_pairs):
+def test_long_strings_exact_not_truncated(long_pairs, monkeypatch):
     """>256-char inputs must match DuckDB exactly (the slow path computes
     at natural length; pre-round-4 they were silently truncated)."""
     s1, s2, ref = long_pairs
-    for duck in (None, False):  # both backends, incl. the numpy slow path
-        assert np.abs(jaro_winkler_np(s1, s2, use_duckdb=duck)
+    for _ in _backends(monkeypatch):  # incl. the numpy slow path
+        assert np.abs(jaro_winkler_np(s1, s2)
                       - ref.jw.to_numpy()).max() < 1e-12
-        assert np.abs(jaro_np(s1, s2, use_duckdb=duck)
-                      - ref.j.to_numpy()).max() < 1e-12
-        assert (edit_distance_np(s1, s2, damerau=False, use_duckdb=duck)
+        assert np.abs(jaro_np(s1, s2) - ref.j.to_numpy()).max() < 1e-12
+        assert (edit_distance_np(s1, s2, damerau=False)
                 == ref.lev.to_numpy()).all()
-        assert (edit_distance_np(s1, s2, damerau=True, use_duckdb=duck)
+        assert (edit_distance_np(s1, s2, damerau=True)
                 == ref.dl.to_numpy()).all()
 
 
-def test_kernel_ceiling_raises_loudly():
+def test_kernel_ceiling_raises_loudly(monkeypatch):
     """Past the exactness ceiling the kernel must raise, never silently
-    approximate."""
-    s1 = pd.Series(["x" * 10_000])
-    s2 = pd.Series(["y" * 10_000])
-    with pytest.raises(ValueError, match="ceiling"):
-        jaro_winkler_np(s1, s2)
-    with pytest.raises(ValueError, match="ceiling"):
-        edit_distance_np(pd.Series(["x" * 3000]), pd.Series(["y"]),
-                         damerau=True)
+    approximate — at the same boundary on both backends: 8192 UTF-8 bytes
+    for Jaro/JW, 8192 codepoints for Levenshtein, 2048 codepoints for
+    Damerau-Levenshtein. At the boundary it still scores exactly."""
+    con = duckdb.connect()
+
+    def duck(fn, a, b):
+        return con.execute(f"select {fn}(?, ?)", [a, b]).fetchone()[0]
+
+    def one(x):
+        return pd.Series([x])
+
+    jw_a, jw_b = "x" * 8192, "x" * 8191 + "y"
+    dl_a, dl_b = "ab" * 1024, "ba" * 1024
+    e = "é" * 4097  # 4097 codepoints, 8194 UTF-8 bytes
+    for _ in _backends(monkeypatch):
+        assert abs(jaro_winkler_np(one(jw_a), one(jw_b))[0]
+                   - duck("jaro_winkler_similarity", jw_a, jw_b)) < 1e-12
+        with pytest.raises(ValueError, match="ceiling"):
+            jaro_winkler_np(one("x" * 8193), one("x"))
+        with pytest.raises(ValueError, match="ceiling"):
+            jaro_winkler_np(one(e), one(""))
+        assert edit_distance_np(one(e), one(""), damerau=False)[0] == 4097
+        with pytest.raises(ValueError, match="ceiling"):
+            edit_distance_np(one("x" * 8193), one("x"), damerau=False)
+        assert edit_distance_np(one(dl_a), one(dl_b), damerau=True)[0] \
+            == duck("damerau_levenshtein", dl_a, dl_b)
+        with pytest.raises(ValueError, match="ceiling"):
+            edit_distance_np(one("x" * 2049), one("x"), damerau=True)
 
 
 def test_arrow_udf_boundary_nan_is_null(spark):
@@ -301,13 +314,17 @@ def test_arrow_udf_boundary_nan_is_null(spark):
         .collect()[0]["v"] == 0.0
 
 
-def test_levenshtein_udf_matches_spark_builtin(spark):
+def test_levenshtein_udf_matches_spark_builtin(spark, monkeypatch):
     """levenshtein_udf is a drop-in for F.levenshtein inside an Arrow
     metric stage: identical values (codepoint counting) AND identical
     NULL -> NULL semantics, on ASCII (duckdb route) and non-ASCII (numpy
-    codepoint kernel) alike."""
+    codepoint kernel) alike, and on both backends. The one divergence is
+    documented: past the 8192-codepoint ceiling the UDF fails the stage
+    where the builtin scores."""
     import random
 
+    import pyarrow as pa
+    from pyspark.errors import PythonException
     from pyspark.sql import functions as F
 
     from memory_optimized_splink_spark.functions.similarity import (
@@ -329,7 +346,19 @@ def test_levenshtein_udf_matches_spark_builtin(spark):
     rows += [(None, "abc"), ("abc", None), (None, None), ("", ""),
              ("", "xyz"), ("a" * 500, "b" * 490)]
     df = spark.createDataFrame(rows, ["a", "b"])
-    got = df.select(F.levenshtein("a", "b").alias("ref"),
+    got = df.select("a", "b", F.levenshtein("a", "b").alias("ref"),
                     levenshtein_udf("a", "b").alias("udf")).collect()
     for r in got:
         assert r["ref"] == r["udf"], (r["ref"], r["udf"])
+    # the Spark workers import duckdb; run the UDF's own function on the
+    # driver to pin the numpy backend against the builtin too
+    a = pa.array([r["a"] for r in got], type=pa.string())
+    b = pa.array([r["b"] for r in got], type=pa.string())
+    for _ in _backends(monkeypatch):
+        assert levenshtein_udf.func(a, b).to_pylist() == \
+            [r["ref"] for r in got]
+
+    long = spark.createDataFrame([("x" * 8193, "y")], ["a", "b"])
+    assert long.select(F.levenshtein("a", "b")).collect()[0][0] == 8193
+    with pytest.raises(PythonException, match="ceiling"):
+        long.select(levenshtein_udf("a", "b")).collect()
